@@ -27,7 +27,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(HERE, "work")
 BUILD = os.path.join(WORK, "build")
-WORKLOADS = ("snb-interactive", "analytics-corpus", "snb-analytics-8x", "corpus-pipeline")
+WORKLOADS = ("snb-interactive", "analytics-corpus")
 BUILD_TIMEOUT_S = 840
 RUN_TIMEOUT_S = 170
 
@@ -167,14 +167,12 @@ def main():
     os.makedirs(os.path.join(run_dir, "tmp"))
     env = dict(os.environ)
     env["SPARK_LOCAL_DIRS"] = os.path.join(run_dir, "spark-local")
-    mem = os.environ.get("PERFBENCH_DRIVER_MEM", "3g")
-    cmd = (["java", f"-Xmx{mem}", f"-Djava.io.tmpdir={os.path.join(run_dir, 'tmp')}",
+    cmd = (["java", "-Xmx3g", f"-Djava.io.tmpdir={os.path.join(run_dir, 'tmp')}",
             "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"]
            + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
            + ["-cp", cp, "perfbench.Main",
               "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
               "--trace", a.trace, "--work", os.path.join(run_dir, "data"),
-              "--digests", os.path.join(HERE, "digests.jsonl"),
               "--trace-dir", os.path.join(WORK, "traces")])
     steal0 = cpu_steal()
     try:

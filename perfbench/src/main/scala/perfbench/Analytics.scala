@@ -8,13 +8,12 @@ import graft.analytics.Iterative
 import graft.graph.PropertyGraph
 import graft.sources.GraphLoader
 
-/** snb-analytics-8x: whole-graph connected components and fixed-point
-  * PageRank over KNOWS on the contiguous 8x replica of the SNB graph,
-  * built in-process. At 8x the directed KNOWS frame is above
-  * `Iterative.DefaultSmallGraphRows`, so both algorithms run the
-  * distributed superstep loop, not the driver escape. */
-object Analytics extends Workload {
-  val name = "snb-analytics-8x"
+/** The snb-analytics-8x part of [[Batch]]: whole-graph connected
+  * components and fixed-point PageRank over KNOWS on the contiguous 8x
+  * replica of the SNB graph, built in-process. At 8x the directed KNOWS
+  * frame is above `Iterative.DefaultSmallGraphRows`, so both algorithms
+  * run the distributed superstep loop, not the driver escape. */
+object Analytics {
   val Replicas = 8
   val PageRankIters = 4
 
@@ -22,11 +21,9 @@ object Analytics extends Workload {
 
   private var expected: Map[String, (Long, Long)] = Map.empty
 
-  def prepare(ctx: Ctx): Unit = ()
-
   /** Builds the 1x source tables and the 8x replica in-process (no
     * parquet replica is written). */
-  def setup(ctx: Ctx, i: Int): State =
+  def setup(ctx: Ctx): State =
     ctx.timed {
       val full = ctx.tracer.span("sources.load") {
         val t = Inputs.snbTables(ctx.spark, ctx.seed, withPosts = false).toMap
@@ -44,7 +41,7 @@ object Analytics extends Workload {
       }
     }
 
-  def checkCounts(ctx: Ctx, st: State): Seq[(String, Long)] = {
+  def checkCounts(st: State): Seq[(String, Long)] = {
     val edges = st.g.edgeFrames(Interactive.Knows).count()
     val cap = Iterative.DefaultSmallGraphRows
     require(edges > cap, s"8x KNOWS has $edges directed edges, not above the escape cap $cap")
@@ -79,7 +76,7 @@ object Analytics extends Workload {
 
   /** Expected outputs, and one untimed parquet write so the writer's
     * first-use cost stays out of the timed writes. */
-  def warm(ctx: Ctx, st: State): Unit = {
+  def warm(ctx: Ctx): Unit = {
     expected = oracle(ctx)
     ctx.spark.range(10).write.mode("overwrite").parquet(ctx.work.resolve("out-warm").toString)
   }
@@ -87,33 +84,30 @@ object Analytics extends Workload {
   private def check(what: String, got: (Long, Long)): Option[String] =
     if (got == expected(what)) None else Some(s"$what digest $got, want ${expected(what)}")
 
-  def passes(seconds: Int): Int = Batch.passes(seconds)
-
-  def pass(ctx: Ctx, st: State, rec: Recorder): Unit = {
-      val cc = rec.op("read", "components") {
-        ctx.tracer.span("analytics.components") {
-          val out = Iterative.connectedComponents(st.g, Set("KNOWS"))
-            .select(col("_vid"), col("component_id").as("v"))
-          (out, ctx.tracer.span("action")(Digest.of(out)))
-        }
-      }(r => check("components", r._2))
-      val pr = rec.op("read", "pagerank") {
-        ctx.tracer.span("analytics.pagerank") {
-          val out = Iterative.pageRankFixedPoint(st.g, PageRankIters, Set("KNOWS"))
-            .select(col("_vid"), col("rank_fp").as("v"))
-          (out, ctx.tracer.span("action")(Digest.of(out)))
-        }
-      }(r => check("pagerank", r._2))
-      Seq("components" -> cc, "pagerank" -> pr).foreach { case (what, res) =>
-        res.foreach { case (out, _) =>
-          rec.op("write", s"write-$what")(ctx.tracer.span("action")(
-            out.write.mode("overwrite").parquet(ctx.work.resolve(s"out-$what").toString)))(_ => None)
-        }
+  def run(ctx: Ctx, st: State, rec: Recorder): Unit = {
+    val cc = rec.op("read", "components") {
+      ctx.tracer.span("analytics.components") {
+        val out = Iterative.connectedComponents(st.g, Set("KNOWS"))
+          .select(col("_vid"), col("component_id").as("v"))
+        (out, ctx.tracer.span("action")(Digest.of(out)))
       }
-    ctx.digests ++= expected
+    }(r => check("components", r._2))
+    val pr = rec.op("read", "pagerank") {
+      ctx.tracer.span("analytics.pagerank") {
+        val out = Iterative.pageRankFixedPoint(st.g, PageRankIters, Set("KNOWS"))
+          .select(col("_vid"), col("rank_fp").as("v"))
+        (out, ctx.tracer.span("action")(Digest.of(out)))
+      }
+    }(r => check("pagerank", r._2))
+    Seq("components" -> cc, "pagerank" -> pr).foreach { case (what, res) =>
+      res.foreach { case (out, _) =>
+        rec.op("write", s"write-$what")(ctx.tracer.span("action")(
+          out.write.mode("overwrite").parquet(ctx.work.resolve(s"out-$what").toString)))(_ => None)
+      }
+    }
   }
 
-  def release(ctx: Ctx, st: State): Unit = st.frames.foreach(graft.plans.Supersteps.release)
+  def release(st: State): Unit = st.frames.foreach(graft.plans.Supersteps.release)
 }
 
 /** Order-independent digest of a frame: (row count, sum over rows of a

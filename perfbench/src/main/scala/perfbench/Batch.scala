@@ -4,35 +4,31 @@ package perfbench
   * the snb-analytics-8x job set (components and fixed-point PageRank on
   * the distributed superstep path), then one corpus-pipeline pass (the
   * `ext` and codegen `functions` layers). They share a run because a
-  * run's fixed cost (JVM and Spark start, three set-ups) is a large
-  * share of each, and the benchmark's whole schedule must fit its time
+  * run's fixed cost (JVM and Spark start, the set-ups) is a large share
+  * of each, and the benchmark's whole schedule must fit its time
   * budget; each keeps its own spans and per-layer metrics. */
 object Batch extends Workload {
   val name = "analytics-corpus"
-  /** Seconds of run length per timed pass of the job set. */
-  val SecondsPerPass = 20
 
   final class State(val analytics: Analytics.State, val corpus: Corpus.State)
 
-  def prepare(ctx: Ctx): Unit = { Analytics.prepare(ctx); Corpus.prepare(ctx) }
+  def prepare(ctx: Ctx): Unit = Corpus.prepare(ctx)
 
   def setup(ctx: Ctx, i: Int): State =
-    ctx.timed(new State(Analytics.setup(ctx, i), Corpus.setup(ctx, i)))
+    ctx.timed(new State(Analytics.setup(ctx), Corpus.setup(ctx, i)))
 
   def checkCounts(ctx: Ctx, st: State): Seq[(String, Long)] =
-    Analytics.checkCounts(ctx, st.analytics) ++ Corpus.checkCounts(ctx, st.corpus)
+    Analytics.checkCounts(st.analytics) ++ Corpus.checkCounts(st.corpus)
 
-  def warm(ctx: Ctx, st: State): Unit = { Analytics.warm(ctx, st.analytics); Corpus.warm(ctx, st.corpus) }
+  def warm(ctx: Ctx, st: State): Unit = { Analytics.warm(ctx); Corpus.warm(ctx, st.corpus) }
 
-  def passes(seconds: Int): Int = math.max(1, seconds / SecondsPerPass)
-
-  def pass(ctx: Ctx, st: State, rec: Recorder): Unit = {
-    Analytics.pass(ctx, st.analytics, rec)
-    Corpus.pass(ctx, st.corpus, rec)
+  def run(ctx: Ctx, st: State, rec: Recorder): Unit = {
+    Analytics.run(ctx, st.analytics, rec)
+    Corpus.run(ctx, st.corpus, rec)
   }
 
   def release(ctx: Ctx, st: State): Unit = {
-    Analytics.release(ctx, st.analytics)
-    Corpus.release(ctx, st.corpus)
+    Analytics.release(st.analytics)
+    Corpus.release(st.corpus)
   }
 }

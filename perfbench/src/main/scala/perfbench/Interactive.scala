@@ -148,12 +148,19 @@ object Interactive extends Workload {
   def ops(seed: Long, n: Int, seconds: Int): Seq[Op] = {
     val r = Inputs.rng(seed, 7, seconds)
     val reads = math.max(100, ReadsPerSecond * seconds)
-    // per 40 reads: 14 IS1, 14 component, 9 IS3, 2 posts-of-friends,
-    // 1 FoF: short reads dominate, as in the SNB Interactive mix
-    val kinds = Array("is1", "comp", "is3", "is1", "comp", "is1", "comp", "is3", "posts", "is1",
-      "comp", "is3", "is1", "comp", "is1", "comp", "is3", "is1", "comp", "fof",
-      "is1", "comp", "is3", "is1", "comp", "is1", "comp", "is3", "posts", "is1",
-      "comp", "is3", "is1", "comp", "is1", "comp", "is3", "is1", "comp", "is3")
+    // The mix is this benchmark's own choice, not a measured trace:
+    // per 20 reads 11 IS1, 4 IS3, 4 component, and one complex read,
+    // posts-of-friends and friends-of-friends in turn. Short reads are
+    // the bulk, and each read percentile falls inside one kind (p50 in
+    // IS1, p90 in IS3), not on a boundary between kinds. A complex read
+    // costs as much as 10-20 short ones, so 5 % of the reads are ~30 %
+    // of the run's time and reach the end-to-end figures through wall_s
+    // and ops_per_s. The component read (the maintained state that
+    // every write folds into) weighs as much as IS3, so the streaming
+    // layer's read side shows in the latencies too.
+    val kinds = Array("is1", "is3", "is1", "comp", "is1", "is1", "is3", "comp", "is1", "complex",
+      "is1", "is3", "is1", "comp", "is1", "is1", "is3", "comp", "is1", "is1")
+    var complex = 0
     val out = mutable.ArrayBuffer.empty[Op]
     var pending = List.empty[Op]
     var k = 0
@@ -172,7 +179,11 @@ object Interactive extends Workload {
       pending match {
         case h :: t => out += h; pending = t
         case Nil =>
-          out += Read(kinds(k % kinds.length), Seq(r.nextInt(n)))
+          val kind = kinds(k % kinds.length) match {
+            case "complex" => complex += 1; if (complex % 2 == 1) "posts" else "fof"
+            case other => other
+          }
+          out += Read(kind, Seq(r.nextInt(n)))
           k += 1
       }
     }
@@ -268,11 +279,14 @@ object Interactive extends Workload {
   private val batchSchema = StructType(Seq(StructField("_src", LongType, false),
     StructField("_dst", LongType, false), StructField("since", LongType, false)))
 
+  private def batchRows(ctx: Ctx, edges: Seq[(Int, Int)]): DataFrame =
+    ctx.spark.createDataFrame(java.util.Arrays.asList(edges.map { case (s, d) =>
+      Row(s.toLong, d.toLong, (7L * s + 3L * d) % 1000) }: _*), batchSchema)
+
   private def write(ctx: Ctx, st: State, rec: Recorder, op: Write, batchId: Long): Unit =
     ctx.tracer.span("op.write") {
       rec.op("write", "add-knows") {
-        val rows = ctx.spark.createDataFrame(java.util.Arrays.asList(op.edges.map { case (s, d) =>
-          Row(s.toLong, d.toLong, (7L * s + 3L * d) % 1000) }: _*), batchSchema)
+        val rows = batchRows(ctx, op.edges)
         st.g = ctx.tracer.span("graph.build")(GraphMutations.addEdges(st.g, Knows, rows))
         st.depth += 1
         ctx.tracer.span("streaming.fold")(st.comps.sink(rows.select("_src", "_dst"), batchId))
@@ -280,19 +294,26 @@ object Interactive extends Workload {
       op.edges.foreach { case (s, d) => st.model.addEdge(s, d) }
     }
 
-  /** One read of each kind, so first-use costs (codegen) stay out of
-    * the timing. */
+  /** Untimed reads of every kind (the short ones several times) and one
+    * write, so first-use costs (codegen, JIT) stay out of the timing.
+    * The write changes nothing: `addEdges` returns a new graph, which is
+    * dropped, and its edges join persons that already share a
+    * component, so the folded labels stay as they were. */
   def warm(ctx: Ctx, st: State): Unit = {
     val rec = new Recorder
-    Seq("is1", "is3", "fof", "posts", "comp").foreach(k => read(ctx, st, rec, Read(k, Seq(0))))
+    val kinds = Seq.fill(8)(Seq("is1", "comp")).flatten ++ Seq("is3", "is3", "fof", "posts")
+    kinds.zipWithIndex.foreach { case (k, i) => read(ctx, st, rec, Read(k, Seq(i))) }
     rec.failures.foreach(f => ctx.log(s"warm-up mismatch: $f"))
     if (rec.failed > 0) throw new IllegalStateException("warm-up reads do not match the model")
+    val m = st.model
+    val rows = batchRows(ctx, Iterator.range(0, m.n)
+      .flatMap(p => m.friends(p).iterator.map(f => (p, f))).take(BatchEdges).toSeq)
+    GraphMutations.addEdges(st.g, Knows, rows)
+    st.comps.sink(rows.select("_src", "_dst"), 0L)
   }
 
-  /** One pass: the whole op sequence, writes chained on one graph. */
-  def passes(seconds: Int): Int = 1
-
-  def pass(ctx: Ctx, st: State, rec: Recorder): Unit = {
+  /** The whole op sequence, writes chained on one graph. */
+  def run(ctx: Ctx, st: State, rec: Recorder): Unit = {
     var batch = 0L
     ops(ctx.seed, st.model.n, ctx.seconds).foreach {
       case r: Read => read(ctx, st, rec, r)

@@ -7,8 +7,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.SparkSession
 
 /** One benchmark workload. `setup` builds a fresh ready-to-query state
-  * (timed through [[Ctx.timed]]); `measure` runs the workload's fixed
-  * op sequence or job set against it and records every op. */
+  * (timed through [[Ctx.timed]]); `run` runs the workload's fixed op
+  * sequence or job set against it once and records every op. */
 trait Workload {
   type State
   def name: String
@@ -19,14 +19,13 @@ trait Workload {
   def checkCounts(ctx: Ctx, st: State): Seq[(String, Long)]
   /** Untimed: first-use costs and the expected outputs. */
   def warm(ctx: Ctx, st: State): Unit
-  /** Timed passes per run of `seconds`; `wall_s` is their median. */
-  def passes(seconds: Int): Int
-  /** One pass: the op sequence or job set, every op recorded. */
-  def pass(ctx: Ctx, st: State, rec: Recorder): Unit
+  /** The op sequence or job set, every op recorded. */
+  def run(ctx: Ctx, st: State, rec: Recorder): Unit
   def release(ctx: Ctx, st: State): Unit
 
+  /** One timed run; its time (output checks excluded) is `wall_s`. */
   def measure(ctx: Ctx, st: State, rec: Recorder): Unit =
-    for (_ <- 1 to passes(ctx.seconds)) rec.passes += rec.clock(pass(ctx, st, rec))
+    rec.wallS = rec.clock(run(ctx, st, rec))
 }
 
 final class Ctx(val spark: SparkSession, val tracer: Tracer, val seed: Long,
@@ -35,8 +34,6 @@ final class Ctx(val spark: SparkSession, val tracer: Tracer, val seed: Long,
   /** (read kind, addEdges chain depth, optimized-plan nodes) of each
     * traced read. */
   val planNodesPerRead = mutable.ArrayBuffer.empty[(String, Int, Int)]
-  /** Output digests of the run, by output name. */
-  val digests = mutable.LinkedHashMap.empty[String, (Long, Long)]
 
   private var timing = false
 
@@ -56,12 +53,13 @@ final class Ctx(val spark: SparkSession, val tracer: Tracer, val seed: Long,
 }
 
 object Main {
-  val Workloads: Seq[Workload] = Seq(Interactive, Batch, Analytics, Corpus)
-  /** Set-ups per run; `setup_s` is their median. */
-  val Setups = 3
+  val Workloads: Seq[Workload] = Seq(Interactive, Batch)
+  /** Set-ups per run. The first pays the JVM's warm-up and is not
+    * counted; `setup_s` is the median of the others. */
+  val Setups = 4
 
   final case class Args(workload: String, seed: Long, seconds: Int, trace: Boolean,
-      work: Path, recorded: Option[Path], traceDir: Path)
+      work: Path, traceDir: Path)
 
   def parse(args: Array[String]): Args = {
     val kv = args.grouped(2).collect { case Array(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
@@ -69,8 +67,7 @@ object Main {
     val a = Args(need("workload"), need("seed").toLong, need("seconds").toInt,
       need("trace") match { case "0" => false; case "1" => true
         case t => throw new IllegalArgumentException(s"--trace must be 0 or 1, got $t") },
-      Paths.get(need("work")), kv.get("digests").map(Paths.get(_)),
-      Paths.get(kv.getOrElse("trace-dir", need("work"))))
+      Paths.get(need("work")), Paths.get(kv.getOrElse("trace-dir", need("work"))))
     require(Workloads.exists(_.name == a.workload),
       s"unknown workload ${a.workload}; one of ${Workloads.map(_.name).mkString(", ")}")
     require(a.seconds >= 1, "--seconds must be >= 1")
@@ -122,10 +119,12 @@ object Main {
     def phase(what: String): Unit = ctx.log(f"$what done at ${(System.nanoTime() - tStart) / 1e9}%.1f s")
     wl.prepare(ctx)
     phase("prepare")
-    val states = (1 to Setups).map(i => wl.setup(ctx, i))
+    // Each set-up starts from a collected heap, and none overlaps the
+    // release of an earlier one.
+    val states = (1 to Setups).map { i => System.gc(); wl.setup(ctx, i) }
     phase("set-up")
-    // Untraced: one timed pass on the last set-up. Traced: an untraced
-    // pass, then the traced pass, one set-up each (trace.overhead_s is
+    // Untraced: one timed run on the last set-up. Traced: an untraced
+    // run, then the traced run, one set-up each (trace.overhead_s is
     // their difference).
     states.dropRight(if (a.trace) 2 else 1).foreach(wl.release(ctx, _))
     val st = states.last
@@ -159,12 +158,9 @@ object Main {
     }
 
     phase("measure")
-    val digestCheck = a.recorded.toSeq.flatMap(p => Recorded.check(p, wl.name, a.seed, ctx.digests.toMap))
-    ctx.log("digests " + Recorded.line(wl.name, a.seed, ctx.digests.toMap))
-    val failures = recs.flatMap(_.failures) ++ digestCheck
-    failures.take(20).foreach(f => ctx.log(s"FAILED: $f"))
+    recs.flatMap(_.failures).take(20).foreach(f => ctx.log(s"FAILED: $f"))
     val attempted = recs.map(_.attempted).sum
-    val failed = recs.map(_.failed).sum + digestCheck.size
+    val failed = recs.map(_.failed).sum
 
     val metrics =
       if (a.trace) layerMetrics
@@ -172,9 +168,9 @@ object Main {
         val r = recs.head
         val ops = r.reads.size + r.writes.size
         Seq(
-          ("setup_s", Stats.median(ctx.setupS.toSeq), "s"),
-          ("wall_s", Stats.median(r.passes.toSeq), "s"),
-          ("ops_per_s", ops / r.passes.sum, "1/s"),
+          ("setup_s", Stats.median(ctx.setupS.drop(1).toSeq), "s"),
+          ("wall_s", r.wallS, "s"),
+          ("ops_per_s", ops / r.wallS, "1/s"),
           ("read_p50_ms", Stats.quantile(r.reads.toSeq, 0.5), "ms"),
           ("read_p90_ms", Stats.quantile(r.reads.toSeq, 0.9), "ms"),
           ("write_p50_ms", Stats.quantile(r.writes.toSeq, 0.5), "ms"),
@@ -205,30 +201,5 @@ object Main {
       i += 1
     } while (i < 10 && math.abs(cur - prev) > (1L << 20))
     cur / 1e6
-  }
-}
-
-/** Output digests recorded per (workload, seed): a run whose seed has a
-  * recorded entry must reproduce it exactly. */
-object Recorded {
-  private val Entry = """"([^"]+)":\s*\[(\d+),\s*(\d+)\]""".r
-
-  def line(workload: String, seed: Long, d: Map[String, (Long, Long)]): String =
-    d.map { case (k, (c, h)) => s""""$k": [$c, $h]""" }
-      .mkString(s"""{"workload": "$workload", "seed": $seed, "digests": {""", ", ", "}}")
-
-  def check(path: Path, workload: String, seed: Long, got: Map[String, (Long, Long)]): Seq[String] = {
-    if (!Files.exists(path)) return Nil
-    val prefix = s"""{"workload": "$workload", "seed": $seed, """
-    val lines = scala.io.Source.fromFile(path.toFile, "UTF-8").getLines().filter(_.startsWith(prefix)).toList
-    lines.flatMap { l =>
-      Entry.findAllMatchIn(l.drop(prefix.length)).flatMap { m =>
-        val want = (m.group(2).toLong, m.group(3).toLong)
-        got.get(m.group(1)) match {
-          case Some(g) if g == want => None
-          case other => Some(s"digest ${m.group(1)} for seed $seed is $other, recorded $want")
-        }
-      }
-    }
   }
 }

@@ -86,6 +86,6 @@ object PerLayer {
       ("ext.bm25_ms", layerMs("ext.bm25"), "ms"),
       ("storage.persisted_rdds_end", sc.getPersistentRDDs.size.toDouble, "count"),
       ("storage.mem_mb_end", sc.getRDDStorageInfo.map(_.memSize).sum / 1e6, "MB"),
-      ("trace.overhead_s", traced.passes.sum - untraced.passes.sum, "s"))
+      ("trace.overhead_s", traced.wallS - untraced.wallS, "s"))
   }
 }

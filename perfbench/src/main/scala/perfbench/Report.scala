@@ -2,13 +2,14 @@ package perfbench
 
 import scala.collection.mutable
 
-/** Everything one measured pass records: per-op latencies by class,
+/** Everything one measured run records: per-op latencies by class,
   * failures (an exception or an output mismatch), and the workload's
   * own per-layer facts (chain depth, plan size per read). */
 final class Recorder {
   val reads = mutable.ArrayBuffer.empty[Double]
   val writes = mutable.ArrayBuffer.empty[Double]
-  val passes = mutable.ArrayBuffer.empty[Double]
+  /** Seconds of the timed run, output checks excluded. */
+  var wallS = 0.0
   val failures = mutable.ArrayBuffer.empty[String]
   val facts = mutable.LinkedHashMap.empty[String, Double]
   /** (op name, latency ms) in run order, for the stderr summary. */
