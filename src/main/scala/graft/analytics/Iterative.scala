@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.graph.PropertyGraph
 import graft.model.{GraphColumns => GC}
+import graft.plans.Supersteps
 
 /** DataFrame-native iterative whole-graph analytics — the Tungsten twin
   * of [[GraphXBridge]] for the two TinkerPop GraphComputer steps a
@@ -30,31 +31,36 @@ object Iterative {
     * one session (the incremental merge runs the loop once per batch). */
   private val obsTag = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Row cap under which an iterative fixpoint collects its BOUNDED
-    * inputs and resolves the loop on the driver instead of running
-    * serial distributed supersteps — the [[mergeComponentsBatch]]
-    * size-adaptive discipline generalized to the whole fixpoint family.
-    *
-    * Why: a superstep round costs ~200-300 ms of driver/scheduler
-    * machinery (measured r17: one join + agg + cut on a 2 000-row state
-    * = ~250 ms regardless of AQE/partition config — the per-round
-    * EXCHANGES are already 1-task under AQE coalescing, so the cost is
-    * stage-materialization jobs and plan analysis, not task width), so
-    * a 10-30-round loop over KB-sized state pays seconds for
-    * microseconds of arithmetic, and MORE cores make it WORSE (the r16
-    * scaling block: ratios 0.49-0.74 across the family). Below the cap
-    * the loop's inputs are collected ONCE (bounded — 200k rows ≈ 3 MB,
-    * the broadcast-dimension footprint class) and the fixpoint is
-    * replayed in exact integer arithmetic on the driver; above it the
-    * distributed superstep path runs UNCHANGED — the 100-TB shape is
-    * untouched, exactly like the union-find escape in
-    * [[mergeComponentsBatch]]. Every driver twin replays the operator's
-    * declared arithmetic verbatim (same integer ops, same tie-breaks),
-    * pinned by IterativeSpec laws against the distributed form. */
-  val DefaultSmallGraphRows: Long = 200000L // == DefaultSmallBatchEdges (a literal: that val initializes later in this object)
+  /** The driver-row cap of the fixpoint family's size-adaptive escapes
+    * ([[graft.plans.Supersteps.adaptive]] holds the rationale). */
+  val DefaultSmallGraphRows: Long = Supersteps.DriverRowCap
 
-  private def boundedRows(df: DataFrame, cap: Long) =
-    graft.plans.Supersteps.boundedRows(df, cap)
+  /** The same cap as it bounds a contracted batch in
+    * [[mergeComponentsBatch]]. */
+  val DefaultSmallBatchEdges: Long = DefaultSmallGraphRows
+
+  /** `(v, min member of v's component)` for every endpoint of `pairs`,
+    * sorted by v: a min-rep union-find (the SMALLER root always wins),
+    * i.e. exactly the min-label fixpoint's representative choice — the
+    * driver form of components in the merge, the fold and the dedup
+    * clusters. */
+  private[graft] def minRepComponents(
+      pairs: Iterator[(Long, Long)]): Array[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val nxt = parent(c); parent(c) = r; c = nxt }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.sorted.map(v => (v, find(v)))
+  }
 
   /** Driver twin of [[minLabelLoop]]: exact min-label fixpoint by
     * worklist relaxation over the collected (bounded) edge and init
@@ -92,18 +98,6 @@ object Iterative {
       }
     }
     lbl.toArray.sortBy(_._1)
-  }
-
-  /** `(_v, _lbl)` pairs as a driver-local frame (the twins' shared
-    * output shape — downstream consumers see a tiny LocalRelation). */
-  private def localPairs(spark: org.apache.spark.sql.SparkSession,
-      rows: Array[(Long, Long)], c1: String, c2: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows.map(p =>
-        org.apache.spark.sql.Row(p._1, p._2)): _*),
-      StructType(Seq(StructField(c1, LongType, nullable = false),
-        StructField(c2, LongType, nullable = false))))
   }
 
   /** Driver twin of [[kCore]]'s bounded peel: same survival rule
@@ -271,6 +265,44 @@ object Iterative {
     verts.map(v => (v, rank(v)))
   }
 
+  /** The fixed-point power iteration behind [[pageRankFixedPoint]] and
+    * [[personalizedPageRankFixedPoint]], size-adaptive: `edges (_s, _d)`
+    * and checkpointed `verts (_v)` in, `(_v, _r)` out. Every vertex gets
+    * `resetMass` per round (`seeds` empty) or only the seeds do; ranks
+    * start at `init`, or AT the reset vector when it is None. Exact Long
+    * sums commute, so the driver twin is bit-identical to the loop. */
+  private def fixedPointPower(edges: DataFrame, verts: DataFrame,
+      iters: Int, init: Option[Long], resetMass: Long,
+      seeds: Set[Long]): DataFrame = {
+    val reset = (v: Long) => if (seeds.isEmpty || seeds(v)) resetMass else 0L
+    Supersteps.adaptive(edges.select(col("_s"), col("_d")),
+        verts.select(col("_v"))) { case Seq(e, v) =>
+      Supersteps.driverFrame(verts.sparkSession, "_v", "_r")(
+        fixedPointPowerDriver(e.pairs, v.longs, iters,
+          init.fold(reset)(r => _ => r), reset))
+    } {
+      val resetCol =
+        if (seeds.isEmpty) lit(resetMass)
+        else when(col("_v").isin(seeds.toSeq: _*), lit(resetMass))
+          .otherwise(lit(0L))
+      val outDeg = edges.groupBy(col("_s")).agg(count(lit(1)).as("_deg"))
+      val degreed = edges.join(outDeg, "_s").localCheckpoint()
+      var rk = verts.withColumn("_r", init.fold(resetCol)(lit(_)))
+      val seed = rk // round-1 state sits on `verts` — never release it
+      for (_ <- 1 to iters) {
+        val contrib = degreed.join(rk, degreed("_s") === rk("_v"))
+          .groupBy(col("_d"))
+          .agg(sum(expr("_r div _deg")).as("_in"))
+        rk = Supersteps.cut(
+          verts.join(contrib, verts("_v") === contrib("_d"), "left")
+            .select(verts("_v"),
+              (resetCol + expr("(85 * coalesce(_in, 0L)) div 100")).as("_r")),
+          superseded = if (rk eq seed) Nil else Seq(rk))
+      }
+      rk
+    }
+  }
+
   /** Packed-id expression for a STATICALLY-known label — pure literal
     * arithmetic (`labelId << 48 | key`), codegen'd, no when-chain: the
     * label of every frame fed to the loops is known from its
@@ -355,24 +387,15 @@ object Iterative {
   // action count while doubling per-action shuffles loses to the
   // coarser convergence granularity. One observed step per cut stands.)
   private[analytics] def minLabelLoop(edges: DataFrame, init: DataFrame,
-      maxIter: Int,
-      smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
-    // SIZE-ADAPTIVE escape (see DefaultSmallGraphRows): a bounded graph
-    // resolves its fixpoint on the driver in exact arithmetic — the
-    // distributed superstep path below is the 100-TB shape, unchanged.
-    val small =
-      boundedRows(edges.select(col("_s"), col("_d")), smallGraphRows)
-        .flatMap { eRows =>
-          boundedRows(init.select(col("_v"), col("_lbl")), smallGraphRows)
-            .map { iRows =>
-              localPairs(edges.sparkSession,
-                minLabelDriver(
-                  eRows.map(r => (r.getLong(0), r.getLong(1))),
-                  iRows.map(r => (r.getLong(0), r.getLong(1)))),
-                "_v", "_lbl")
-            }
-        }
-    if (small.isDefined) return small.get
+      maxIter: Int): DataFrame =
+    Supersteps.adaptive(edges.select(col("_s"), col("_d")),
+        init.select(col("_v"), col("_lbl"))) { case Seq(e, i) =>
+      Supersteps.driverFrame(edges.sparkSession, "_v", "_lbl")(
+        minLabelDriver(e.pairs, i.pairs))
+    }(minLabelSupersteps(edges, init, maxIter))
+
+  private def minLabelSupersteps(edges: DataFrame, init: DataFrame,
+      maxIter: Int): DataFrame = {
     var labels = init
     var iter = 0
     var done = false
@@ -415,8 +438,7 @@ object Iterative {
   }
 
   def connectedComponents(g: PropertyGraph,
-      edgeLabels: Set[String] = Set.empty, maxIter: Int = 30,
-      smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
+      edgeLabels: Set[String] = Set.empty, maxIter: Int = 30): DataFrame = {
     // the escape collects the raw frames; only the distributed loop
     // needs them checkpointed, and minLabelLoop's probe is a bounded
     // LIMIT collect either way
@@ -425,7 +447,7 @@ object Iterative {
     var labels = minLabelLoop(edges,
       packedVertices(g, touched)
         .select(col("_v"), col("_v").as("_lbl")).localCheckpoint(),
-      maxIter, smallGraphRows)
+      maxIter)
     val untouched = g.vertexLabels.toSet -- touched
     if (untouched.nonEmpty)
       labels = labels.unionByName(
@@ -461,16 +483,8 @@ object Iterative {
     * by the threshold, never corpus-sized. Min of mins is the global
     * min, so merged components keep the invariant exactly; StreamsSpec
     * pins both paths to the same fixpoint. */
-  /** Contracted-batch size (edges) below which [[mergeComponentsBatch]]
-    * resolves representatives with a driver union-find over one bounded
-    * collect instead of the distributed min-label fixpoint: 200k edges
-    * ≈ 3 MB collected, resolved in milliseconds — vs ~5 serial
-    * distributed rounds at the per-action job floor. */
-  val DefaultSmallBatchEdges: Long = 200000L
-
   def mergeComponentsBatch(state: DataFrame, batch: DataFrame,
-      maxIter: Int = 30,
-      smallBatchEdges: Long = DefaultSmallBatchEdges): DataFrame = {
+      maxIter: Int = 30): DataFrame = {
     val mappedPlan = batch
       .join(state.select(col("_v").as("_s"), col("_lbl").as("_sl")),
         Seq("_s"), "left")
@@ -481,55 +495,32 @@ object Iterative {
     // SIZE-ADAPTIVE merge of the contracted graph. Per-batch work is
     // batch-sized BY CONSTRUCTION (contracted nodes <= 2|batch|), so a
     // bounded batch — every streaming micro-batch, most incremental
-    // folds — resolves its representatives with a driver union-find
+    // folds — resolves its representatives with the driver union-find
     // over ONE bounded collect (min-rep semantics, exactly the
     // minLabelLoop fixpoint) instead of ~5 serial distributed rounds
     // at the per-action job floor; the bounded probe collects the
     // contracted rows DIRECTLY (no intermediate checkpoint — r17: the
     // per-batch checkpoint+collect pair was two serial actions where
     // one suffices). Above the bound the distributed fixpoint runs as
-    // before — the 100-TB path is unchanged, and the collect is bounded
-    // by `smallBatchEdges`, never corpus-sized.
+    // before — the 100-TB path is unchanged.
     val (mapped, reps) =
-      graft.plans.Supersteps.boundedRows(mappedPlan, smallBatchEdges) match {
-        case Some(rows) =>
-          val parent = scala.collection.mutable.LongMap.empty[Long]
-          def find(x: Long): Long = {
-            var r = x
-            while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-            var c = x
-            while (parent.getOrElse(c, c) != c) {
-              val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-            }
-            r
-          }
-          def union(a: Long, b: Long): Unit = {
-            val (ra, rb) = (find(a), find(b))
-            if (ra != rb) {
-              // min-rep rule: the SMALLER label roots the tree, exactly
-              // the min-label fixpoint's representative choice
-              if (ra < rb) parent(rb) = ra else parent(ra) = rb
-            }
-          }
-          rows.foreach(r => union(r.getLong(0), r.getLong(1)))
-          val nodes = rows.iterator
-            .flatMap(r => Iterator(r.getLong(0), r.getLong(1)))
-            .toArray.distinct.sorted
-          (None, localPairs(batch.sparkSession,
-            nodes.map(v => (v, find(v))), "_v", "_lbl"))
-        case None =>
-          val mappedCk = mappedPlan.localCheckpoint()
-          // nodes/doubled stay LAZY over the checkpointed rows: each
-          // re-evaluation is one narrow map over persisted blocks,
-          // cheaper than the eager checkpoint actions they'd otherwise
-          // cost (the per-action job floor dominates this fold locally)
-          val nodes = mappedCk.select(col("_s").as("_v"))
-            .unionByName(mappedCk.select(col("_d").as("_v")))
-            .dropDuplicates("_v")
-          val doubled = mappedCk.unionByName(
-            mappedCk.select(col("_d").as("_s"), col("_s").as("_d")))
-          (Some(mappedCk), minLabelLoop(doubled,
-            nodes.select(col("_v"), col("_v").as("_lbl")), maxIter))
+      Supersteps.adaptive(mappedPlan) { case Seq(m) =>
+        val reps = minRepComponents(m.pairs.iterator)
+        (Option.empty[DataFrame],
+          Supersteps.driverFrame(batch.sparkSession, "_v", "_lbl")(reps))
+      } {
+        val mappedCk = mappedPlan.localCheckpoint()
+        // nodes/doubled stay LAZY over the checkpointed rows: each
+        // re-evaluation is one narrow map over persisted blocks,
+        // cheaper than the eager checkpoint actions they'd otherwise
+        // cost (the per-action job floor dominates this fold locally)
+        val nodes = mappedCk.select(col("_s").as("_v"))
+          .unionByName(mappedCk.select(col("_d").as("_v")))
+          .dropDuplicates("_v")
+        val doubled = mappedCk.unionByName(
+          mappedCk.select(col("_d").as("_s"), col("_s").as("_d")))
+        (Some(mappedCk), minLabelLoop(doubled,
+          nodes.select(col("_v"), col("_v").as("_lbl")), maxIter))
       }
     // grow the state by the batch's brand-new vertices (they entered
     // the contracted graph as themselves), then relabel every vertex
@@ -564,80 +555,36 @@ object Iterative {
     * the whole-graph pass. Frames are raw bigint `(src, dst)` /
     * `(id)`; multi-label callers pack first. */
   def incrementalComponents(vertices: DataFrame, batches: Seq[DataFrame],
-      maxIter: Int = 30,
-      smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
-    // SIZE-ADAPTIVE escape (DefaultSmallGraphRows): when the seed set
-    // and EVERY batch are bounded, the same per-batch fold — contract
-    // endpoints through the current state, resolve representatives by
-    // the min-rep rule, grow by brand-new vertices, relabel — runs on
-    // driver maps, batch by batch in arrival order, preserving the
-    // min-representative invariant exactly as [[mergeComponentsBatch]]
-    // does (StreamsSpec pins the streaming twin to the same fixpoint).
-    // Above the cap the distributed fold below is unchanged.
-    val smallAll = for {
-      v <- boundedRows(vertices
-        .select(col(vertices.columns.head).cast("bigint").as("_v")),
-        smallGraphRows)
-      bs <- batches.foldLeft(
-        Option(Seq.empty[Array[org.apache.spark.sql.Row]])) { (acc, b) =>
-        acc.flatMap { seqs =>
-          val cols = b.columns
-          boundedRows(b.select(col(cols(0)).cast("bigint").as("_s"),
-            col(cols(1)).cast("bigint").as("_d")), smallGraphRows)
-            .map(seqs :+ _)
-        }
-      }
-    } yield {
-      val state = scala.collection.mutable.LongMap.empty[Long]
-      v.foreach(r => state(r.getLong(0)) = r.getLong(0))
-      bs.foreach { batch =>
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) {
-            val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-          }
-          r
-        }
-        batch.foreach { r =>
-          val (s, d) = (r.getLong(0), r.getLong(1))
-          // contract through the current state (unseen endpoints stand
-          // for themselves), then union under the min-rep rule
-          val (cs, cd) = (state.getOrElse(s, s), state.getOrElse(d, d))
-          val (ra, rb) = (find(cs), find(cd))
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-        // grow by the batch's brand-new vertices, then relabel through
-        // the resolved representatives (identity for untouched labels)
-        batch.foreach { r =>
-          Seq(r.getLong(0), r.getLong(1)).foreach { x =>
-            if (!state.contains(x)) state(x) = x
-          }
-        }
-        val relabeled = state.toArray.map { case (vv, l) => (vv, find(l)) }
-        relabeled.foreach { case (vv, l) => state(vv) = l }
-      }
-      localPairs(vertices.sparkSession,
-        state.toArray.sortBy(_._1), "id", "component")
-    }
-    smallAll match {
-      case Some(res) => return res
-      case None =>
-    }
-    val state0 = vertices.select(col(vertices.columns.head).cast("bigint").as("_v"))
-      .dropDuplicates("_v")
-      .select(col("_v"), col("_v").as("_lbl")).localCheckpoint()
-    batches.foldLeft(state0) { (st, b) =>
+      maxIter: Int = 30): DataFrame = {
+    // SIZE-ADAPTIVE escape: when the seed set and ALL batches together
+    // fit the kernel's one driver-row budget, one min-rep union-find
+    // over every batch edge lands on the fold's fixpoint (each fold
+    // keeps the min-representative invariant, so any split of the edge
+    // multiset resolves to the same components); the seed vertices
+    // outside every batch stay singletons. Above the budget the
+    // distributed fold below is unchanged.
+    val seed = vertices.select(col(vertices.columns.head).cast("bigint").as("_v"))
+    val edgeFrames = batches.map { b =>
       val cols = b.columns
-      val merged = mergeComponentsBatch(st,
-        b.select(col(cols(0)).cast("bigint").as("_s"),
-          col(cols(1)).cast("bigint").as("_d")))
-      // st is superseded the moment the merge's cut materializes
-      graft.plans.Supersteps.release(st)
-      merged
-    }.select(col("_v").as("id"), col("_lbl").as("component"))
+      b.select(col(cols(0)).cast("bigint").as("_s"),
+        col(cols(1)).cast("bigint").as("_d"))
+    }
+    Supersteps.adaptive(seed +: edgeFrames: _*) { case v +: bs =>
+      val reps = scala.collection.mutable.LongMap.from(
+        minRepComponents(bs.iterator.flatMap(_.pairs)))
+      Supersteps.driverFrame(vertices.sparkSession, "id", "component")(
+        (v.longs ++ reps.keys).distinct.sorted
+          .map(x => (x, reps.getOrElse(x, x))))
+    } {
+      val state0 = seed.dropDuplicates("_v")
+        .select(col("_v"), col("_v").as("_lbl")).localCheckpoint()
+      edgeFrames.foldLeft(state0) { (st, b) =>
+        val merged = mergeComponentsBatch(st, b)
+        // st is superseded the moment the merge's cut materializes
+        Supersteps.release(st)
+        merged
+      }.select(col("_v").as("id"), col("_lbl").as("component"))
+    }
   }
 
   /** k-core decomposition (bounded peel): iteratively drop vertices
@@ -654,27 +601,25 @@ object Iterative {
     * as `(label, _vid, degree)`, degree measured within the final
     * surviving subgraph. */
   def kCore(g: PropertyGraph, k: Int,
-      edgeLabels: Set[String] = Set.empty, maxRounds: Int = 20,
-      smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
+      edgeLabels: Set[String] = Set.empty, maxRounds: Int = 20): DataFrame = {
     require(k >= 1, s"kCore needs k >= 1, got $k")
     val edgesRaw = packedEdges(g, edgeLabels, undirected = true)
     val vertsRaw = packedVertices(g, incidentLabels(g, edgeLabels))
-    // SIZE-ADAPTIVE escape (DefaultSmallGraphRows): the bounded peel
-    // replays on the driver — same survival rule, budget, early exit.
-    val small = for {
-      e <- boundedRows(edgesRaw.select(col("_s"), col("_d")),
-        smallGraphRows)
-      v <- boundedRows(vertsRaw.select(col("_v")), smallGraphRows)
-    } yield localPairs(vertsRaw.sparkSession,
-      kCoreDriver(e.map(r => (r.getLong(0), r.getLong(1))),
-        v.map(_.getLong(0)), k, maxRounds), "_v", "_deg")
-    small match {
-      case Some(res) => return res.select(
-        unpackLabelStr(g, col("_v")).as("label"),
-        unpackKey(col("_v")).as(GC.Id),
-        col("_deg").as("degree"))
-      case None =>
-    }
+    // SIZE-ADAPTIVE escape: the bounded peel replays on the driver —
+    // same survival rule, budget, early exit.
+    Supersteps.adaptive(edgesRaw.select(col("_s"), col("_d")),
+        vertsRaw.select(col("_v"))) { case Seq(e, v) =>
+      Supersteps.driverFrame(g.spark, "_v", "_deg")(
+        kCoreDriver(e.pairs, v.longs, k, maxRounds))
+        .select(
+          unpackLabelStr(g, col("_v")).as("label"),
+          unpackKey(col("_v")).as(GC.Id),
+          col("_deg").as("degree"))
+    }(kCorePeel(g, edgesRaw, vertsRaw, k, maxRounds))
+  }
+
+  private def kCorePeel(g: PropertyGraph, edgesRaw: DataFrame,
+      vertsRaw: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     val edges = edgesRaw.localCheckpoint()
     val obs0 = new org.apache.spark.sql.Observation(
       s"kcore_init_${obsTag.incrementAndGet()}")
@@ -730,50 +675,35 @@ object Iterative {
     * row_number window (partitioned by vertex — never a global sort).
     * Output: `(label, _vid, community_label, community_id)`. */
   def labelPropagation(g: PropertyGraph, iters: Int = 5,
-      edgeLabels: Set[String] = Set.empty,
-      smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
+      edgeLabels: Set[String] = Set.empty): DataFrame = {
     require(iters >= 1, s"labelPropagation needs iters >= 1, got $iters")
     val edgesRaw = packedEdges(g, edgeLabels, undirected = true)
     val touched = incidentLabels(g, edgeLabels)
     val vertsRaw = packedVertices(g, touched)
-    // SIZE-ADAPTIVE escape (DefaultSmallGraphRows): the synchronous
-    // rounds replay on the driver — same frequency rule and tie order.
-    val small = for {
-      e <- boundedRows(edgesRaw.select(col("_s"), col("_d")),
-        smallGraphRows)
-      v <- boundedRows(vertsRaw.select(col("_v")), smallGraphRows)
-    } yield localPairs(vertsRaw.sparkSession,
-      lpaDriver(e.map(r => (r.getLong(0), r.getLong(1))),
-        v.map(_.getLong(0)), iters), "_v", "_lbl")
-    small match {
-      case Some(res) =>
-        var out = res
-        val untouchedS = g.vertexLabels.toSet -- touched
-        if (untouchedS.nonEmpty)
-          out = out.unionByName(packedVertices(g, untouchedS)
-            .select(col("_v"), col("_v").as("_lbl")))
-        return out.select(
-          unpackLabelStr(g, col("_v")).as("label"),
-          unpackKey(col("_v")).as(GC.Id),
-          unpackLabelStr(g, col("_lbl")).as("community_label"),
-          unpackKey(col("_lbl")).as("community_id"))
-      case None =>
-    }
-    val edges = edgesRaw.localCheckpoint()
-    var labels = vertsRaw
-      .select(col("_v"), col("_v").as("_lbl")).localCheckpoint()
-    for (_ <- 1 to iters) {
-      val freq = edges.join(labels, edges("_d") === labels("_v"))
-        .groupBy(col("_s"), col("_lbl")).agg(count(lit(1)).as("_n"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("_s")).orderBy(desc("_n"), asc("_lbl"))
-      val best = freq.withColumn("_rn", row_number().over(w))
-        .where(col("_rn") === 1)
-        .select(col("_s").as("_bv"), col("_lbl").as("_nl"))
-      labels = graft.plans.Supersteps.cut( // loop-carried: cut stats
-        labels.join(best, labels("_v") === col("_bv"), "left")
-          .select(labels("_v"), coalesce(col("_nl"), col("_lbl")).as("_lbl")),
-        superseded = Seq(labels)) // seed is loop-owned — releasable
+    // SIZE-ADAPTIVE escape: the synchronous rounds replay on the
+    // driver — same frequency rule and tie order.
+    var labels = Supersteps.adaptive(edgesRaw.select(col("_s"), col("_d")),
+        vertsRaw.select(col("_v"))) { case Seq(e, v) =>
+      Supersteps.driverFrame(g.spark, "_v", "_lbl")(
+        lpaDriver(e.pairs, v.longs, iters))
+    } {
+      val edges = edgesRaw.localCheckpoint()
+      var labels = vertsRaw
+        .select(col("_v"), col("_v").as("_lbl")).localCheckpoint()
+      for (_ <- 1 to iters) {
+        val freq = edges.join(labels, edges("_d") === labels("_v"))
+          .groupBy(col("_s"), col("_lbl")).agg(count(lit(1)).as("_n"))
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col("_s")).orderBy(desc("_n"), asc("_lbl"))
+        val best = freq.withColumn("_rn", row_number().over(w))
+          .where(col("_rn") === 1)
+          .select(col("_s").as("_bv"), col("_lbl").as("_nl"))
+        labels = Supersteps.cut( // loop-carried: cut stats
+          labels.join(best, labels("_v") === col("_bv"), "left")
+            .select(labels("_v"), coalesce(col("_nl"), col("_lbl")).as("_lbl")),
+          superseded = Seq(labels)) // seed is loop-owned — releasable
+      }
+      labels
     }
     val untouched = g.vertexLabels.toSet -- touched
     if (untouched.nonEmpty)
@@ -915,8 +845,7 @@ object Iterative {
     * Output: `(label, _vid, rank_fp)` with rank_fp the scaled long. */
   def pageRankFixedPoint(g: PropertyGraph, iters: Int = 10,
       edgeLabels: Set[String] = Set.empty,
-      scale: Long = 1000000000000L,
-      smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1, s"pageRankFixedPoint needs iters >= 1, got $iters")
     val edges = packedEdges(g, edgeLabels, undirected = false)
     val touched = incidentLabels(g, edgeLabels)
@@ -945,41 +874,13 @@ object Iterative {
         s"of 1/$workScale")
       g.variables.set("graft.pagerank.work_scale", workScale.toString)
     }
-    // SIZE-ADAPTIVE escape (DefaultSmallGraphRows): a bounded graph
-    // replays the integer recurrence on the driver — exact Long sums
-    // commute, so the result is bit-identical to the superstep loop.
-    val small = for {
-      e <- boundedRows(edges.select(col("_s"), col("_d")),
-        smallGraphRows)
-      v <- boundedRows(verts.select(col("_v")), smallGraphRows)
-    } yield localPairs(verts.sparkSession,
-      fixedPointPowerDriver(e.map(r => (r.getLong(0), r.getLong(1))),
-        v.map(_.getLong(0)), iters,
-        init = _ => workScale,
-        reset = _ => (15L * workScale) / 100L),
-      "_v", "_r")
-    var ranks = small.getOrElse {
-      val outDeg = edges.groupBy(col("_s")).agg(count(lit(1)).as("_deg"))
-      val degreed = edges.join(outDeg, "_s").localCheckpoint()
-      var rk = verts.withColumn("_r", lit(workScale))
-      val init = rk // round-1 state sits on `verts` — never release it
-      for (_ <- 1 to iters) {
-        val contrib = degreed.join(rk, degreed("_s") === rk("_v"))
-          .groupBy(col("_d"))
-          .agg(sum(expr("_r div _deg")).as("_in"))
-        rk = graft.plans.Supersteps.cut(
-          verts.join(contrib, verts("_v") === contrib("_d"), "left")
-            .select(verts("_v"),
-              (expr(s"(15 * ${workScale}L) div 100")
-                + expr("(85 * coalesce(_in, 0L)) div 100")).as("_r")),
-          superseded = if (rk eq init) Nil else Seq(rk))
-      }
-      rk
-    }
+    val resetMass = (15L * workScale) / 100L
+    var ranks = fixedPointPower(edges, verts, iters, init = Some(workScale),
+      resetMass, seeds = Set.empty)
     val untouched = g.vertexLabels.toSet -- touched
     if (untouched.nonEmpty)
       ranks = ranks.unionByName(packedVertices(g, untouched)
-        .withColumn("_r", expr(s"(15 * ${workScale}L) div 100")))
+        .withColumn("_r", lit(resetMass)))
     ranks.select(
       unpackLabelStr(g, col("_v")).as("label"),
       unpackKey(col("_v")).as(GC.Id),
@@ -1000,8 +901,7 @@ object Iterative {
   def personalizedPageRankFixedPoint(g: PropertyGraph, seedLabel: String,
       seedIds: Seq[Long], iters: Int = 10,
       edgeLabels: Set[String] = Set.empty,
-      scale: Long = 1000000000000L,
-      smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
+      scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1, s"personalizedPageRank needs iters >= 1, got $iters")
     require(seedIds.nonEmpty, "personalizedPageRank needs at least one seed")
     val edges = packedEdges(g, edgeLabels, undirected = false)
@@ -1013,37 +913,9 @@ object Iterative {
     val seedSet = seedIds.map(graft.analytics.GraphXBridge.pack(
       g.labelIds(seedLabel), _))
     val resetPerSeed = 15L * scale / 100L * nVerts / seedIds.size
-    val reset = when(col("_v").isin(seedSet: _*), lit(resetPerSeed))
-      .otherwise(lit(0L))
-    // SIZE-ADAPTIVE escape (DefaultSmallGraphRows): same integer
-    // recurrence replayed on the driver — init IS the reset vector here.
-    val seedLongs = seedSet.toSet
-    val resetFn = (v: Long) => if (seedLongs.contains(v)) resetPerSeed else 0L
-    val small = for {
-      e <- boundedRows(edges.select(col("_s"), col("_d")),
-        smallGraphRows)
-      v <- boundedRows(verts.select(col("_v")), smallGraphRows)
-    } yield localPairs(verts.sparkSession,
-      fixedPointPowerDriver(e.map(r => (r.getLong(0), r.getLong(1))),
-        v.map(_.getLong(0)), iters, init = resetFn, reset = resetFn),
-      "_v", "_r")
-    val ranks = small.getOrElse {
-      val outDeg = edges.groupBy(col("_s")).agg(count(lit(1)).as("_deg"))
-      val degreed = edges.join(outDeg, "_s").localCheckpoint()
-      var rk = verts.withColumn("_r", reset)
-      val init = rk // round-1 state sits on `verts` — never release it
-      for (_ <- 1 to iters) {
-        val contrib = degreed.join(rk, degreed("_s") === rk("_v"))
-          .groupBy(col("_d"))
-          .agg(sum(expr("_r div _deg")).as("_in"))
-        rk = graft.plans.Supersteps.cut(
-          verts.join(contrib, verts("_v") === contrib("_d"), "left")
-            .select(verts("_v"),
-              (reset + expr("(85 * coalesce(_in, 0L)) div 100")).as("_r")),
-          superseded = if (rk eq init) Nil else Seq(rk))
-      }
-      rk
-    }
+    // ranks start AT the reset vector (init = None)
+    val ranks = fixedPointPower(edges, verts, iters, init = None,
+      resetPerSeed, seedSet.toSet)
     ranks.select(
       unpackLabelStr(g, col("_v")).as("label"),
       unpackKey(col("_v")).as(GC.Id),
@@ -1069,40 +941,30 @@ object Iterative {
     * Output: (label, id, hub_fp, auth_fp). */
   def hitsFixedPoint(g: PropertyGraph, iters: Int = 5,
       edgeLabels: Set[String] = Set.empty,
-      scale: Long = 1000000L,
-      smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
+      scale: Long = 1000000L): DataFrame = {
     require(iters >= 1, s"hitsFixedPoint needs iters >= 1, got $iters")
     val edgesRaw = packedEdges(g, edgeLabels, undirected = false)
     val touched = incidentLabels(g, edgeLabels)
     val vertsRaw = packedVertices(g, touched)
-    // SIZE-ADAPTIVE escape (DefaultSmallGraphRows): exact Long gathers
-    // and renormalizations replayed on the driver.
-    val smallHits = for {
-      e <- boundedRows(edgesRaw.select(col("_s"), col("_d")),
-        smallGraphRows)
-      v <- boundedRows(vertsRaw.select(col("_v")), smallGraphRows)
-    } yield {
+    // SIZE-ADAPTIVE escape: exact Long gathers and renormalizations
+    // replayed on the driver.
+    Supersteps.adaptive(edgesRaw.select(col("_s"), col("_d")),
+        vertsRaw.select(col("_v"))) { case Seq(e, v) =>
       val b = math.max(e.length.toLong, v.length.toLong)
       require(BigInt(b) * scale * scale < BigInt(Long.MaxValue),
         s"fixed-point overflow: bound=$b scale=$scale")
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      vertsRaw.sparkSession.createDataFrame(
-        java.util.Arrays.asList(
-          hitsDriver(e.map(r => (r.getLong(0), r.getLong(1))),
-            v.map(_.getLong(0)), iters, scale)
-            .map(t => org.apache.spark.sql.Row(t._1, t._2, t._3)): _*),
-        StructType(Seq(StructField("_v", LongType, nullable = false),
-          StructField("_h", LongType, nullable = false),
-          StructField("_a", LongType, nullable = false))))
-    }
-    smallHits match {
-      case Some(res) => return res.select(
-        unpackLabelStr(g, col("_v")).as("label"),
-        unpackKey(col("_v")).as(GC.Id),
-        col("_h").as("hub_fp"),
-        col("_a").as("auth_fp"))
-      case None =>
-    }
+      Supersteps.driverFrame(g.spark, "_v", "_h", "_a")(
+        hitsDriver(e.pairs, v.longs, iters, scale))
+        .select(
+          unpackLabelStr(g, col("_v")).as("label"),
+          unpackKey(col("_v")).as(GC.Id),
+          col("_h").as("hub_fp"),
+          col("_a").as("auth_fp"))
+    }(hitsSupersteps(g, edgesRaw, vertsRaw, iters, scale))
+  }
+
+  private def hitsSupersteps(g: PropertyGraph, edgesRaw: DataFrame,
+      vertsRaw: DataFrame, iters: Int, scale: Long): DataFrame = {
     val edges = edgesRaw.localCheckpoint()
     val verts = vertsRaw.localCheckpoint()
     val bound = math.max(edges.count(), verts.count())
@@ -1166,10 +1028,8 @@ object Iterative {
     * the representative being the packed-smallest member. */
   def stronglyConnectedComponents(g: PropertyGraph,
       edgeLabels: Set[String] = Set.empty, maxOuter: Int = 20,
-      maxIter: Int = 60,
-      smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
-    val resolved = sccAssignments(g, edgeLabels, maxOuter, maxIter,
-      smallGraphRows)
+      maxIter: Int = 60): DataFrame = {
+    val resolved = sccAssignments(g, edgeLabels, maxOuter, maxIter)
     resolved.select(
       unpackLabelStr(g, col("_v")).as("label"),
       unpackKey(col("_v")).as(GC.Id),
@@ -1188,8 +1048,7 @@ object Iterative {
     * (~40 driver actions), and re-running it per consumer was the
     * main bench noise of the q59 family (round-10 verdict task 5). */
   def sccAssignments(g: PropertyGraph, edgeLabels: Set[String],
-      maxOuter: Int = 20, maxIter: Int = 60,
-      smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
+      maxOuter: Int = 20, maxIter: Int = 60): DataFrame = {
     val edges0 = packedEdges(g, edgeLabels, undirected = false)
       .distinct().localCheckpoint()
     val touched = incidentLabels(g, edgeLabels)
@@ -1210,13 +1069,15 @@ object Iterative {
       // (Spark schedules jobs from concurrent threads fine; results
       // are exact integer fixpoints, identical under any scheduling.
       // The q54-family cost is almost entirely this serial action
-      // floor, so the overlap is worth a ~2x on the whole peel.)
+      // floor, so the overlap is worth a ~2x on the whole peel.) The
+      // pool thread does not inherit this thread's escape scope, so the
+      // forward loop re-enters the captured one.
+      val scope = Supersteps.currentScope
       val fwdF = scala.concurrent.Future(
-        minLabelLoop(edges, init, maxIter, smallGraphRows))(
+        Supersteps.inScope(scope)(minLabelLoop(edges, init, maxIter)))(
         scala.concurrent.ExecutionContext.global)
       val bwd = minLabelLoop(
-        edges.select(col("_d").as("_s"), col("_s").as("_d")), init, maxIter,
-        smallGraphRows)
+        edges.select(col("_d").as("_s"), col("_s").as("_d")), init, maxIter)
         .select(col("_v").as("_bv"), col("_lbl").as("_bl"))
       val fwd = scala.concurrent.Await.result(fwdF,
         scala.concurrent.duration.Duration.Inf)
@@ -1522,37 +1383,29 @@ object Iterative {
     * than the edge frame. Output: `(label, _vid id, mis_round)` — MIS
     * members only, with the round that admitted them. */
   def maximalIndependentSet(g: PropertyGraph,
-      edgeLabels: Set[String] = Set.empty, maxRounds: Int = 15,
-      smallGraphRows: Long = DefaultSmallGraphRows): DataFrame = {
+      edgeLabels: Set[String] = Set.empty, maxRounds: Int = 15): DataFrame = {
     val edgesRaw = packedEdges(g, edgeLabels, undirected = true).distinct()
     val touched = incidentLabels(g, edgeLabels)
     val vertsRaw = packedVertices(g, touched)
-    // SIZE-ADAPTIVE escape (DefaultSmallGraphRows): Luby rounds with the
-    // identical md5 priorities replayed on the driver; a blown round
-    // budget throws the same contract error as the distributed peel.
-    val smallMis = for {
-      e <- boundedRows(edgesRaw.select(col("_s"), col("_d")),
-        smallGraphRows)
-      v <- boundedRows(vertsRaw.select(col("_v")), smallGraphRows)
-    } yield {
-      val got = misDriver(e.map(r => (r.getLong(0), r.getLong(1))),
-        v.map(_.getLong(0)), maxRounds)
+    // SIZE-ADAPTIVE escape: Luby rounds with the identical md5
+    // priorities replayed on the driver; a blown round budget throws the
+    // same contract error as the distributed peel.
+    Supersteps.adaptive(edgesRaw.select(col("_s"), col("_d")),
+        vertsRaw.select(col("_v"))) { case Seq(e, v) =>
+      val got = misDriver(e.pairs, v.longs, maxRounds)
       require(got.isDefined,
         s"MIS did not converge in $maxRounds rounds (driver peel)")
-      import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-      vertsRaw.sparkSession.createDataFrame(
-        java.util.Arrays.asList(got.get.map(t =>
-          org.apache.spark.sql.Row(t._1, t._2)): _*),
-        StructType(Seq(StructField("_v", LongType, nullable = false),
-          StructField("_round", IntegerType, nullable = false))))
-    }
-    smallMis match {
-      case Some(res) => return res.select(
-        unpackLabelStr(g, col("_v")).as("label"),
-        unpackKey(col("_v")).as(GC.Id),
-        col("_round").as("mis_round"))
-      case None =>
-    }
+      Supersteps.driverFrame(g.spark, "_v", "_round")(
+        got.get.map { case (x, r) => (x, r.toLong) })
+        .select(
+          unpackLabelStr(g, col("_v")).as("label"),
+          unpackKey(col("_v")).as(GC.Id),
+          col("_round").cast("int").as("mis_round"))
+    }(lubyPeel(g, edgesRaw, vertsRaw, maxRounds))
+  }
+
+  private def lubyPeel(g: PropertyGraph, edgesRaw: DataFrame,
+      vertsRaw: DataFrame, maxRounds: Int): DataFrame = {
     var edges = edgesRaw.localCheckpoint()
     var active = vertsRaw.localCheckpoint()
     var nActive = active.count()

@@ -403,53 +403,30 @@ object Dedup {
     * run [[graft.analytics.GraphXBridge]] connected components instead
     * (Pregel halves rounds via large-star/small-star style hops). */
   def dedupClusters(docs: DataFrame, maxIter: Int = 20,
-      maxBucket: Long = graft.operators.Skew.DefaultBucketCap,
-      smallGraphRows: Long =
-        graft.analytics.Iterative.DefaultSmallGraphRows): DataFrame = {
+      maxBucket: Long = graft.operators.Skew.DefaultBucketCap): DataFrame = {
     val pairs = minhashCandidatePairs(docs, maxBucket)
-    // SIZE-ADAPTIVE escape (graft.analytics.Iterative.DefaultSmallGraphRows
-    // — the mergeComponentsBatch union-find discipline): near-dup pair
-    // sets are sparse by construction (banded LSH candidates), so a
-    // bounded pair set resolves its transitive components with one
-    // driver union-find (min-rep rule — exactly the min-label fixpoint's
+    // SIZE-ADAPTIVE escape (graft.plans.Supersteps.adaptive): near-dup
+    // pair sets are sparse by construction (banded LSH candidates), so
+    // a bounded pair set resolves its transitive components with the
+    // driver min-rep union-find (exactly the min-label fixpoint's
     // representative) and ONE corpus join attaches keep_id; docs outside
     // any pair keep themselves via the left-join coalesce, exactly the
     // fixpoint's untouched-label behavior. Above the cap the superstep
     // loop below runs unchanged (the 100-TB shape).
-    graft.plans.Supersteps.boundedRows(
-        pairs.select(col("doc_a"), col("doc_b")),
-        smallGraphRows) match {
-      case Some(rows) =>
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) {
-            val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-          }
-          r
-        }
-        rows.foreach { r =>
-          val (a, b) = (r.getLong(0), r.getLong(1))
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-        val members = rows.iterator
-          .flatMap(r => Iterator(r.getLong(0), r.getLong(1)))
-          .toArray.distinct.sorted
-        import org.apache.spark.sql.types.{LongType, StructField, StructType}
-        val comps = docs.sparkSession.createDataFrame(
-          java.util.Arrays.asList(members.map(v =>
-            org.apache.spark.sql.Row(v, find(v))): _*),
-          StructType(Seq(StructField("doc_id", LongType, nullable = false),
-            StructField("_keep", LongType, nullable = false))))
-        return docs.select(col("doc_id"))
-          .join(comps, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            coalesce(col("_keep"), col("doc_id")).as("keep_id"))
-      case None =>
-    }
+    graft.plans.Supersteps.adaptive(
+        pairs.select(col("doc_a"), col("doc_b"))) { case Seq(p) =>
+      val comps = graft.plans.Supersteps.driverFrame(docs.sparkSession,
+        "_id", "_keep")(graft.analytics.Iterative.minRepComponents(
+          p.pairs.iterator))
+      docs.select(col("doc_id"))
+        .join(comps, col("doc_id") === col("_id"), "left")
+        .select(col("doc_id"), coalesce(col("_keep"), col("doc_id"))
+          .cast(docs.schema("doc_id").dataType).as("keep_id"))
+    }(minLabelClusters(docs, pairs, maxIter))
+  }
+
+  private def minLabelClusters(docs: DataFrame, pairs: DataFrame,
+      maxIter: Int): DataFrame = {
     val edges = pairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .unionByName(pairs.select(col("doc_b").as("u"), col("doc_a").as("v")))
       .localCheckpoint()

@@ -95,14 +95,12 @@ object Preference {
     * superstep-cut. Players appearing only as never-winners floor to
     * 1; a player's games and wins are loop constants, checkpointed
     * once. */
-  def bradleyTerryStates(games: DataFrame, rounds: Int,
-      smallGamesRows: Long =
-        graft.analytics.Iterative.DefaultSmallGraphRows): Seq[DataFrame] =
-    mmLoop(games, rounds, keepAll = true, smallGamesRows)
+  def bradleyTerryStates(games: DataFrame, rounds: Int): Seq[DataFrame] =
+    mmLoop(games, rounds, keepAll = true)
 
   /** Driver twin of the MM loop for a BOUNDED comparison log (the
-    * [[graft.analytics.Iterative.DefaultSmallGraphRows]] size-adaptive
-    * escape): the identical integer recurrence — per-game reciprocal
+    * [[graft.plans.Supersteps.adaptive]] size-adaptive escape): the
+    * identical integer recurrence — per-game reciprocal
     * `S² div (wa + wb)` in Long, per-player denominator summed as
     * BigInteger (the DECIMAL(38,0) twin; addition commutes, so any
     * distributed partial-agg order lands on the same value), and the
@@ -143,38 +141,25 @@ object Preference {
     out.result()
   }
 
-  private def localState(spark: org.apache.spark.sql.SparkSession,
-      rows: Array[(Long, Long)]): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows.map(p =>
-        org.apache.spark.sql.Row(p._1, p._2)): _*),
-      StructType(Seq(StructField("t", LongType, nullable = false),
-        StructField("w", LongType, nullable = false))))
-  }
-
   /** The MM loop. `keepAll = true` keeps every round's blocks live (the
     * spec / inspection path); `false` releases each superseded round
     * once its successor materializes (the [[Glove]]-verdict unpersist
     * discipline — the query path only needs the last state). */
   private def mmLoop(games: DataFrame, rounds: Int,
-      keepAll: Boolean,
-      smallGamesRows: Long =
-        graft.analytics.Iterative.DefaultSmallGraphRows): Seq[DataFrame] = {
+      keepAll: Boolean): Seq[DataFrame] = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // SIZE-ADAPTIVE escape: a bounded game log resolves all rounds on
     // the driver (see mmDriver); the superstep path below is the
     // billions-of-comparisons shape, unchanged.
-    graft.plans.Supersteps.boundedRows(
-        games.select(col("a"), col("b"), col("win_a")),
-        smallGamesRows) match {
-      case Some(rows) =>
-        val spark = games.sparkSession
-        return mmDriver(
-          rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))),
-          rounds).map(localState(spark, _))
-      case None =>
-    }
+    graft.plans.Supersteps.adaptive(
+        games.select(col("a"), col("b"), col("win_a"))) { case Seq(gs) =>
+      mmDriver(gs.triples, rounds).map(
+        graft.plans.Supersteps.driverFrame(games.sparkSession, "t", "w")(_))
+    }(mmSupersteps(games, rounds, keepAll))
+  }
+
+  private def mmSupersteps(games: DataFrame, rounds: Int,
+      keepAll: Boolean): Seq[DataFrame] = {
     val g = games.select(col("a"), col("b"), col("win_a"))
       .localCheckpoint()
     val players = g.select(col("a").as("t"))
@@ -214,15 +199,13 @@ object Preference {
 
   /** Final ratings joined back to the game record:
     * `(t, n_games, wins, w_fp)`. */
-  def bradleyTerry(games: DataFrame, rounds: Int = 6,
-      smallGamesRows: Long =
-        graft.analytics.Iterative.DefaultSmallGraphRows): DataFrame = {
+  def bradleyTerry(games: DataFrame, rounds: Int = 6): DataFrame = {
     val g = games.select(col("a"), col("b"), col("win_a"))
     val inc = g.select(col("a").as("t"), col("win_a").as("_w"))
       .unionByName(g.select(col("b").as("t"), (lit(1L) - col("win_a")).as("_w")))
       .groupBy("t")
       .agg(count(lit(1)).as("n_games"), sum(col("_w")).as("wins"))
-    mmLoop(games, rounds, keepAll = false, smallGamesRows).last
+    mmLoop(games, rounds, keepAll = false).last
       .join(inc, Seq("t"))
       .select(col("t"), col("n_games"), col("wins"), col("w").as("w_fp"))
   }

@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Superstep checkpoint discipline.
   *
@@ -100,16 +101,107 @@ object Supersteps {
   /** Whether an RDD id is exempt from block-cleanup sweeps. */
   def isPinned(rddId: Int): Boolean = pinned.contains(rddId)
 
-  /** Collect up to `cap` rows of a frame, or None when it is larger —
-    * the probe behind the fixpoint family's SIZE-ADAPTIVE driver
-    * escapes ([[graft.analytics.Iterative.DefaultSmallGraphRows]]): one
-    * bounded job (LIMIT cap+1 stops the scan early, so the probe is
-    * cheap even on a corpus-sized frame), never a corpus-sized
-    * collect. */
-  def boundedRows(df: DataFrame,
-      cap: Long): Option[Array[org.apache.spark.sql.Row]] = {
-    if (cap <= 0 || cap >= Int.MaxValue) return None
-    val rows = df.limit(cap.toInt + 1).collect()
-    if (rows.length > cap) None else Some(rows)
+  /** Row cap under which [[adaptive]] collects its inputs and resolves
+    * a fixpoint on the driver instead of running serial distributed
+    * supersteps.
+    *
+    * Why: a superstep round costs ~200-300 ms of driver/scheduler
+    * machinery (measured r17: one join + agg + cut on a 2 000-row state
+    * = ~250 ms regardless of AQE/partition config — the per-round
+    * EXCHANGES are already 1-task under AQE coalescing, so the cost is
+    * stage-materialization jobs and plan analysis, not task width), so
+    * a 10-30-round loop over KB-sized state pays seconds for
+    * microseconds of arithmetic, and MORE cores make it WORSE (the r16
+    * scaling block: ratios 0.49-0.74 across the family). Below the cap
+    * the loop's inputs are collected ONCE (bounded — 200k rows ≈ 3 MB,
+    * the broadcast-dimension footprint class) and the fixpoint is
+    * replayed in exact integer arithmetic on the driver; above it the
+    * distributed superstep path runs unchanged. */
+  val DriverRowCap: Long = 200000L
+
+  /** One probed input of [[adaptive]]: its rows with every column cast
+    * to bigint, read as plain arrays. */
+  final class Probed private[Supersteps] (rows: Array[Row]) {
+    def length: Int = rows.length
+    def longs: Array[Long] = rows.map(_.getLong(0))
+    def pairs: Array[(Long, Long)] = rows.map(r => (r.getLong(0), r.getLong(1)))
+    def triples: Array[(Long, Long, Long)] =
+      rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
   }
+
+  /** A scoped cap for [[adaptive]] and the branches taken under it. */
+  private[graft] final class EscapeScope(val cap: Long) {
+    val onDriver = new java.util.concurrent.atomic.AtomicInteger()
+    val distributed = new java.util.concurrent.atomic.AtomicInteger()
+  }
+
+  private val scope = new scala.util.DynamicVariable[Option[EscapeScope]](None)
+
+  /** The scope in force on this thread. A fixpoint forked onto another
+    * thread (the SCC peel's forward loop) captures it before forking
+    * and re-enters it with [[inScope]]. */
+  private[graft] def currentScope: Option[EscapeScope] = scope.value
+
+  private[graft] def inScope[T](s: Option[EscapeScope])(body: => T): T =
+    scope.withValue(s)(body)
+
+  /** Runs `body` with every [[adaptive]] call under `cap` (0 forces the
+    * distributed branch), returning the branches it took. */
+  private[graft] def withCap[T](cap: Long)(body: => T): (T, EscapeScope) = {
+    val s = new EscapeScope(cap)
+    (inScope(Some(s))(body), s)
+  }
+
+  /** The SIZE-ADAPTIVE escape kernel of the fixpoint family. Probes
+    * `frames` in order; when all of them together hold at most
+    * [[DriverRowCap]] rows, `onDriver` gets their rows (one [[Probed]]
+    * per frame, columns cast to bigint) and replays the fixpoint in
+    * exact arithmetic; otherwise `distributed` runs the superstep path.
+    * Every driver twin replays its operator's declared arithmetic
+    * verbatim (same integer ops, same tie-breaks), pinned by law tests
+    * against the distributed form.
+    *
+    * The frames share ONE budget: each probe may collect only what the
+    * earlier ones left, so driver state stays bounded by the cap however
+    * many frames (a seed plus every batch of a fold) one call takes.
+    * Probing stops at the first frame over the remaining budget, so
+    * above the cap the probe jobs already run are the only extra work. */
+  def adaptive[T](frames: DataFrame*)(onDriver: Seq[Probed] => T)(
+      distributed: => T): T = {
+    val s = scope.value
+    val cap = s.fold(DriverRowCap)(_.cap)
+    var left = cap
+    val probed = Seq.newBuilder[Probed]
+    val fits = cap > 0 && cap < Int.MaxValue && frames.forall { df =>
+      boundedRows(df, left).exists { rows =>
+        left -= rows.length
+        probed += new Probed(rows)
+        true
+      }
+    }
+    if (fits) { s.foreach(_.onDriver.incrementAndGet()); onDriver(probed.result()) }
+    else { s.foreach(_.distributed.incrementAndGet()); distributed }
+  }
+
+  /** Collect up to `budget` rows of a frame, every column cast to
+    * bigint, or None when it is larger: one `LIMIT budget+1` job, never
+    * a corpus-sized collect. The LIMIT stops the scan early only when
+    * the frame is scan-shaped (a checkpoint or a narrow projection of
+    * one); a shuffle-fed frame runs all its upstream stages to
+    * completion, and when it is over the budget the distributed branch
+    * then computes it a second time — the open checkpoint-before-probe
+    * item of ROADMAP direction 2. */
+  private def boundedRows(df: DataFrame, budget: Long): Option[Array[Row]] = {
+    val rows = df.select(df.columns.toSeq.map(c => df.col(c).cast("bigint")): _*)
+      .limit(budget.toInt + 1).collect()
+    if (rows.length > budget) None else Some(rows)
+  }
+
+  /** Driver rows as a local frame of non-null bigint columns `names` —
+    * the escapes' shared output shape (a tiny LocalRelation). */
+  private[graft] def driverFrame(spark: SparkSession, names: String*)(
+      rows: Iterable[Product]): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(rows.map(Row.fromTuple).toSeq: _*),
+      StructType(names.map(StructField(_, LongType, nullable = false))))
 }

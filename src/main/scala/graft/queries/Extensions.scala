@@ -50,8 +50,6 @@ object Extensions {
   // plan re-scans the table many times (e72's trainer chains, e87's
   // n-gram legs) pays one added exchange per scan and got SLOWER with
   // a blanket fan-out (r17 A/B), so the default readers stay narrow.
-  private def docsWide(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Tables.readWide(s, s"$dir/documents.parquet")
   private def embWide(s: SparkSession, dir: String): DataFrame =
     graft.sources.Tables.readWide(s, s"$dir/embeddings.parquet")
   /** Normalizes `events.ts` to session-timezone TIMESTAMP regardless of

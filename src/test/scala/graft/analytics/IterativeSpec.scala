@@ -576,50 +576,128 @@ class IterativeSpec extends SparkSpec {
     assert(got.nonEmpty && got.forall(_ == 0L))
   }
 
+  // ---- size-adaptive escapes: driver twin == distributed loop ----
+
+  private val knowsSpec = graft.model.EdgeSpec("KNOWS", "Person", "Person")
+
+  /** A seeded random Person/KNOWS graph with sparse ids, self-loops,
+    * duplicate edges and isolated vertices; seed 0 is the empty vertex
+    * set. Returns the vertex ids and the directed edge multiset. */
+  private def randomGraph(seed: Int): (Seq[Long], Seq[(Long, Long)]) = {
+    val rnd = new scala.util.Random(seed)
+    val n = if (seed == 0) 0 else 6 + rnd.nextInt(8)
+    val ids = rnd.shuffle((0 until n).map(i => 3L * i + 1)).toSeq
+    val linked = ids.drop(2) // the first two stay isolated
+    if (linked.isEmpty) return (ids, Nil)
+    def pick = linked(rnd.nextInt(linked.size))
+    val es = Seq.fill(n + rnd.nextInt(n))((pick, pick))
+    (ids, es ++ es.take(2) :+ ((linked.head, linked.head)))
+  }
+
+  private def graphOf(ids: Seq[Long], es: Seq[(Long, Long)]) =
+    new graft.graph.PropertyGraph(spark,
+      Map("Person" -> ids.toDF(GC.Id)),
+      Map(knowsSpec -> es.toDF(GC.Src, GC.Dst)))
+
+  /** The q54 thinned KNOWS graph (real multi-SCC structure). */
+  private lazy val thinned = new graft.graph.PropertyGraph(spark, g.vertexFrames,
+    g.edgeFrames.updated(knowsSpec, g.edgeFrames(knowsSpec)
+      .where((col(GC.Src) * 7 + col(GC.Dst) * 13) % 5 < 3)))
+
+  private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** The escape law: `op` under the default cap runs only driver
+    * twins, under a cap of 0 only the distributed loops, and both
+    * return the same rows. `reaches` = false when `op` never gets to a
+    * fixpoint (the SCC peel over an empty vertex set). */
+  private def escapeLaw(hint: String, reaches: Boolean = true)(
+      op: => org.apache.spark.sql.DataFrame): Unit = {
+    val (small, d) = graft.plans.Supersteps.withCap(Iterative.DefaultSmallGraphRows)(canon(op))
+    val (forced, f) = graft.plans.Supersteps.withCap(0L)(canon(op))
+    assert(d.distributed.get == 0 && (d.onDriver.get > 0) == reaches,
+      s"$hint: default cap left the driver")
+    assert(f.onDriver.get == 0 && (f.distributed.get > 0) == reaches,
+      s"$hint: cap 0 stayed on the driver")
+    assert(small == forced, hint)
+  }
+
+  private val lawSeeds = Seq(0, 11, 42, 97)
+
   test("driver-escape twins equal the distributed superstep loops exactly") {
-    // The r17 size-adaptive escapes (DefaultSmallGraphRows) replay each
-    // loop's declared integer arithmetic on the driver. This law runs
-    // every escaped operator BOTH ways on the same graph —
-    // smallGraphRows = 0 forces the distributed superstep path — and
-    // demands exact frame equality, which is precisely the claim the
-    // escape makes (same arithmetic, same tie-breaks, same rounds).
-    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).sorted.toSeq
-    def both(f: Long => org.apache.spark.sql.DataFrame): Unit =
-      assert(canon(f(Iterative.DefaultSmallGraphRows)) == canon(f(0L)))
-    both(s => Iterative.kCore(g, 5, Set("KNOWS"), maxRounds = 4,
-      smallGraphRows = s))
-    both(s => Iterative.labelPropagation(g, 5, Set("KNOWS"),
-      smallGraphRows = s))
-    both(s => Iterative.pageRankFixedPoint(g, iters = 5,
-      edgeLabels = Set("KNOWS"), smallGraphRows = s))
-    both(s => Iterative.personalizedPageRankFixedPoint(g, "Person",
-      Seq(0L, 1L, 2L), iters = 5, edgeLabels = Set("KNOWS"),
-      smallGraphRows = s))
-    both(s => Iterative.hitsFixedPoint(g, iters = 3,
-      edgeLabels = Set("KNOWS"), smallGraphRows = s))
-    both(s => Iterative.maximalIndependentSet(g, Set("KNOWS"),
-      smallGraphRows = s))
-    // minLabelLoop (q42/q54's inner fixpoints) through its public faces:
-    // undirected via connectedComponents, directed via the SCC peel of
-    // the q54-style thinned graph
-    both(s => Iterative.connectedComponents(g, Set("KNOWS"),
-      smallGraphRows = s))
-    val spec = graft.model.EdgeSpec("KNOWS", "Person", "Person")
-    val thinned = new graft.graph.PropertyGraph(spark, g.vertexFrames,
-      g.edgeFrames.updated(spec, g.edgeFrames(spec)
-        .where((col(GC.Src) * 7 + col(GC.Dst) * 13) % 5 < 3)))
-    both(s => Iterative.stronglyConnectedComponents(thinned, Set("KNOWS"),
-      smallGraphRows = s))
-    // incrementalComponents' whole-fold escape vs the distributed fold
-    val knows = g.edgeFrames(spec)
-      .select(col(GC.Src).cast("bigint").as("src"),
-        col(GC.Dst).cast("bigint").as("dst"))
-    val batches = (0 until 3).map(i =>
-      knows.where(pmod(col("src") + col("dst"), lit(3)) === i))
-    val verts = g.vertexFrames("Person").select(col(GC.Id))
-    both(s => Iterative.incrementalComponents(verts, batches,
-      smallGraphRows = s))
+    val graphs = lawSeeds.map { s =>
+      val (ids, es) = randomGraph(s)
+      (s"seed $s", graphOf(ids, es), ids.nonEmpty)
+    } :+ (("q54 thinned", thinned, true))
+    val k = Set("KNOWS")
+    graphs.foreach { case (name, gr, hasVertices) =>
+      escapeLaw(s"kCore $name")(Iterative.kCore(gr, 2, k, maxRounds = 4))
+      escapeLaw(s"LPA $name")(Iterative.labelPropagation(gr, 3, k))
+      escapeLaw(s"PR $name")(Iterative.pageRankFixedPoint(gr, iters = 4,
+        edgeLabels = k))
+      escapeLaw(s"PPR $name")(Iterative.personalizedPageRankFixedPoint(gr,
+        "Person", Seq(1L, 4L), iters = 4, edgeLabels = k))
+      escapeLaw(s"HITS $name")(Iterative.hitsFixedPoint(gr, iters = 3,
+        edgeLabels = k))
+      escapeLaw(s"MIS $name")(Iterative.maximalIndependentSet(gr, k))
+      escapeLaw(s"CC $name")(Iterative.connectedComponents(gr, k))
+      escapeLaw(s"SCC $name", reaches = hasVertices)(
+        Iterative.stronglyConnectedComponents(gr, k))
+    }
+  }
+
+  test("driver-escape twins: incremental fold, any split, int or bigint ids") {
+    // the fixture split where only the LAST batch bridges the two
+    // triangles, then seeded random splits of the random graphs
+    val bridge = Seq(Seq((2L, 3L), (1L, 2L), (1L, 3L)),
+      Seq((5L, 6L), (5L, 7L), (6L, 7L)), Seq((4L, 5L), (1L, 4L)))
+    val cases = ((1L to 7L) :+ 9L, bridge) +: lawSeeds.map { s =>
+      val (ids, es) = randomGraph(s)
+      val rnd = new scala.util.Random(s + 1)
+      (ids, es.groupBy(_ => rnd.nextInt(3)).values.toSeq)
+    }
+    cases.zipWithIndex.foreach { case ((ids, splits), i) =>
+      val asInt = i % 2 == 1
+      def frame(rows: Seq[(Long, Long)]) =
+        if (asInt) rows.map { case (a, b) => (a.toInt, b.toInt) }.toDF("src", "dst")
+        else rows.toDF("src", "dst")
+      val verts = if (asInt) ids.map(_.toInt).toDF("id") else ids.toDF("id")
+      escapeLaw(s"incremental case $i")(
+        Iterative.incrementalComponents(verts, splits.map(frame)))
+    }
+  }
+
+  test("driver-escape twins: inputs of exactly cap and cap+1 rows") {
+    // connectedComponents probes the doubled edges, then the vertices:
+    // one budget of 2|E| + |V| rows runs the whole fixpoint on the
+    // driver, one row less runs it distributed, and both agree
+    val (ids, es) = randomGraph(42)
+    val gr = graphOf(ids, es)
+    val rows = 2L * es.size + ids.size
+    val (atCap, d) = graft.plans.Supersteps.withCap(rows)(
+      canon(Iterative.connectedComponents(gr, Set("KNOWS"))))
+    val (overCap, f) = graft.plans.Supersteps.withCap(rows - 1)(
+      canon(Iterative.connectedComponents(gr, Set("KNOWS"))))
+    assert(d.onDriver.get == 1 && d.distributed.get == 0)
+    assert(f.onDriver.get == 0 && f.distributed.get == 1)
+    assert(atCap == overCap)
+  }
+
+  test("incremental fold: seed and batches each under the cap, their sum over it, folds distributed") {
+    val verts = (1L to 8L).toDF("id")
+    val batches = Seq(Seq((1L, 2L), (2L, 3L), (5L, 6L)),
+      Seq((3L, 4L), (6L, 7L), (7L, 5L)), Seq((4L, 1L), (8L, 8L)))
+      .map(_.toDF("src", "dst"))
+    val oneShot = canon(Iterative.incrementalComponents(verts,
+      Seq(batches.reduce(_.unionByName(_)))))
+    // 8 + 3 + 3 + 2 = 16 rows against a cap of 10: the whole-fold escape
+    // must not take the driver, while each batch's merge still may
+    val (folded, scope) = graft.plans.Supersteps.withCap(10L)(
+      canon(Iterative.incrementalComponents(verts, batches)))
+    assert(scope.distributed.get == 1 && scope.onDriver.get == batches.size)
+    assert(folded == oneShot)
+    assert(oneShot == Seq("[1,1]", "[2,1]", "[3,1]", "[4,1]", "[5,5]",
+      "[6,5]", "[7,5]", "[8,8]"))
   }
 
   test("step modulators annotate the frontier") {

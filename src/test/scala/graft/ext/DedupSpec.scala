@@ -478,16 +478,57 @@ class DedupSpec extends SparkSpec {
     assert(uncapped == block + ((1L, 2L)))
   }
 
+  /** A seeded random corpus: near-dup chains (each doc one word away
+    * from the last), exact duplicates, unrelated singletons and short
+    * docs, under sparse shuffled ids; seed 0 is the empty corpus. */
+  private def randomCorpus(seed: Int): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(seed)
+    if (seed == 0) return Nil
+    val vocab = (0 until 60).map(i => s"w$i")
+    def words(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size)))
+    val texts = (0 until 2 + rnd.nextInt(3)).flatMap { _ =>
+      val base = words(10).toArray
+      (0 until 1 + rnd.nextInt(4)).map { _ =>
+        base(rnd.nextInt(base.length)) = vocab(rnd.nextInt(vocab.size))
+        base.mkString(" ")
+      }
+    }
+    val all = texts ++ texts.take(2) ++ Seq.fill(2)(words(10).mkString(" ")) :+ "ab cd"
+    rnd.shuffle(all).zipWithIndex.map { case (t, i) => (7L * i + 3, t) }
+  }
+
+  private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Driver union-find vs superstep loop under a forced cap of 0, each
+    * side asserted to have taken its branch. */
+  private def escapeLaw(docs: org.apache.spark.sql.DataFrame, hint: String): Unit = {
+    val (small, d) = graft.plans.Supersteps.withCap(
+      graft.plans.Supersteps.DriverRowCap)(canon(Dedup.dedupClusters(docs)))
+    val (forced, f) = graft.plans.Supersteps.withCap(0L)(
+      canon(Dedup.dedupClusters(docs)))
+    assert(d.onDriver.get == 1 && d.distributed.get == 0, hint)
+    assert(f.onDriver.get == 0 && f.distributed.get == 1, hint)
+    assert(small == forced, hint)
+  }
+
   test("dedupClusters driver union-find escape equals the superstep loop") {
     val chain = Seq(
       (1L, "alpha beta gamma delta epsilon zeta"),
       (2L, "alpha beta gamma delta epsilon eta"),
       (3L, "alpha beta gamma delta theta eta"),
-      (10L, "totally different words entirely here now")
-    ).toDF("doc_id", "text")
-    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).sorted.toSeq
-    assert(canon(Dedup.dedupClusters(chain)) ==
-      canon(Dedup.dedupClusters(chain, smallGraphRows = 0L)))
+      (10L, "totally different words entirely here now"))
+    (("chain fixture", chain) +: Seq(0, 11, 42, 97).map(s =>
+      s"seed $s" -> randomCorpus(s))).foreach { case (hint, rows) =>
+      escapeLaw(rows.toDF("doc_id", "text"), hint)
+    }
+  }
+
+  test("dedupClusters escape accepts an int-typed doc_id") {
+    val docs = randomCorpus(42).map { case (i, t) => (i.toInt, t) }
+      .toDF("doc_id", "text")
+    escapeLaw(docs, "int doc_id")
+    assert(Dedup.dedupClusters(docs).schema("keep_id").dataType ==
+      org.apache.spark.sql.types.IntegerType)
   }
 }

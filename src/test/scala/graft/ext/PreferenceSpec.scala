@@ -113,20 +113,56 @@ class PreferenceSpec extends SparkSpec {
     assert(a == b)
   }
 
+  private def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  /** Final ratings and every state, driver twin vs the superstep loop
+    * under a forced cap of 0, each side asserted to have taken its
+    * branch (one kernel call per operator run). */
+  private def escapeLaw(games: org.apache.spark.sql.DataFrame, hint: String): Unit = {
+    def both(run: => Seq[Seq[String]]): Unit = {
+      val (small, d) = graft.plans.Supersteps.withCap(
+        graft.plans.Supersteps.DriverRowCap)(run)
+      val (forced, f) = graft.plans.Supersteps.withCap(0L)(run)
+      assert(d.onDriver.get == 1 && d.distributed.get == 0, hint)
+      assert(f.onDriver.get == 0 && f.distributed.get == 1, hint)
+      assert(small == forced, hint)
+    }
+    both(Seq(canon(Preference.bradleyTerry(games, rounds = 4))))
+    both(Preference.bradleyTerryStates(games, 3).map(canon))
+  }
+
+  /** A seeded random comparison log: sparse player ids, repeated pairs
+    * (n_ij > 1), an undefeated player and a never-winner. */
+  private def randomGames(seed: Int): Seq[(Long, Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val players = (0 until 4 + rnd.nextInt(6)).map(i => 5L * i + 2)
+    val games = Seq.fill(3 * players.size) {
+      val a = players(rnd.nextInt(players.size))
+      val b = players.filter(_ != a)(rnd.nextInt(players.size - 1))
+      (a, b, rnd.nextInt(2).toLong)
+    }
+    // 1000 never loses, 1001 never wins
+    val (p0, p1) = (players.head, players.last)
+    games ++ games.take(3) ++ Seq((1000L, p0, 1L), (p1, 1000L, 0L),
+      (1001L, p0, 0L), (p1, 1001L, 1L))
+  }
+
   test("bradleyTerry driver escape equals the distributed MM loop exactly") {
-    // the r17 size-adaptive escape: smallGamesRows = 0 forces the
-    // superstep path; the two runs must agree bit for bit
+    // the ring-derived fixture log, then seeded random logs
     val docs = (0L until 60L).map(i =>
       (i, s"g${i % 3}", (i * 37 % 11).toDouble)).toDF("doc_id", "_g", "_q")
-    val games = Preference.ringGames(docs, col("_g"), col("_q"))
-      .localCheckpoint()
-    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] =
-      df.collect().map(_.toString).sorted.toSeq
-    assert(canon(Preference.bradleyTerry(games, rounds = 4)) ==
-      canon(Preference.bradleyTerry(games, rounds = 4, smallGamesRows = 0L)))
-    val a = Preference.bradleyTerryStates(games, 3)
-    val b = Preference.bradleyTerryStates(games, 3, smallGamesRows = 0L)
-    assert(a.size == b.size &&
-      a.zip(b).forall { case (x, y) => canon(x) == canon(y) })
+    escapeLaw(Preference.ringGames(docs, col("_g"), col("_q"))
+      .localCheckpoint(), "ring fixture")
+    Seq(11, 42, 97).foreach { s =>
+      escapeLaw(randomGames(s).toDF("a", "b", "win_a"), s"seed $s")
+    }
+  }
+
+  test("bradleyTerry escape accepts int-typed a, b and win_a") {
+    val games = randomGames(42)
+      .map { case (a, b, w) => (a.toInt, b.toInt, w.toInt) }
+      .toDF("a", "b", "win_a")
+    escapeLaw(games, "int games")
   }
 }

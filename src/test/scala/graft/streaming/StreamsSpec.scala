@@ -117,49 +117,77 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** Components of an edge multiset over `verts` by a plain driver
+    * union-find: vertex -> min member of its component. */
+  private def componentsModel(verts: Seq[Long],
+      edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val all = (verts ++ edges.flatMap(e => Seq(e._1, e._2))).distinct
+    val rep = scala.collection.mutable.Map(all.map(v => v -> v): _*)
+    def find(v: Long): Long = if (rep(v) == v) v else find(rep(v))
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      rep(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    all.map(v => v -> find(v)).toMap
+  }
+
   test("incremental components: streaming fold == batch fold == one-shot, any split") {
     implicit val sqlCtx = spark.sqlContext
     // two triangles bridged by (4,5), vertex 9 isolated: components
-    // {1,2,3,4,5,6,7} (rep 1) and {9}
+    // {1,2,3,4,5,6,7} (rep 1) and {9}; the fixture split's middle batch
+    // arrives as disconnected fragments that only the LAST batch
+    // bridges. Seeded random splits (self-loops, duplicate edges,
+    // isolated vertices, empty batches) ride the same law.
     val edges = Seq((2L, 3L), (1L, 2L), (1L, 3L), (5L, 6L), (5L, 7L),
       (6L, 7L), (4L, 5L), (1L, 4L))
-    val verts = (1L to 7L).toDF("id").unionByName(Seq(9L).toDF("id"))
+    val fixture = ((1L to 7L) :+ 9L,
+      Seq(edges.take(3), edges.slice(3, 6), edges.drop(6)))
+    assert(componentsModel(fixture._1, edges) == Map(1L -> 1L, 2L -> 1L,
+      3L -> 1L, 4L -> 1L, 5L -> 1L, 6L -> 1L, 7L -> 1L, 9L -> 9L))
+    val random = Seq(5, 23).map { seed =>
+      val rnd = new scala.util.Random(seed)
+      val verts = (0 until 10).map(i => 4L * i + 2)
+      def pick = verts(rnd.nextInt(7)) // the last three stay isolated
+      val es = Seq.fill(12)((pick, pick))
+      (verts, Seq(es.take(5), Nil, es.drop(5) ++ es.take(2)))
+    }
     def assignment(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
       df.as[(Long, Long)].collect().toMap
-    // one-shot reference: everything in a single batch
-    val oneShot = assignment(graft.analytics.Iterative
-      .incrementalComponents(verts, Seq(edges.toDF("src", "dst"))))
-    assert(oneShot == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      5L -> 1L, 6L -> 1L, 7L -> 1L, 9L -> 9L))
-    // batch fold: an adversarial split whose middle batch arrives as
-    // disconnected fragments that only the LAST batch bridges
-    val splits = Seq(edges.take(3), edges.slice(3, 6), edges.drop(6))
-    val folded = assignment(graft.analytics.Iterative
-      .incrementalComponents(verts, splits.map(_.toDF("src", "dst"))))
-    assert(folded == oneShot)
-    // the two merge paths must agree: the driver union-find (every
-    // fixture batch is under the size bound) vs the distributed
-    // min-label fixpoint, forced here via smallBatchEdges = 0 — the
-    // 100-TB path must not rot just because fixtures never reach it
-    val distFolded = assignment(splits.foldLeft(
-      verts.select(col("id").cast("bigint").as("_v"))
-        .select(col("_v"), col("_v").as("_lbl")).localCheckpoint()) {
-      (st, b) => graft.analytics.Iterative.mergeComponentsBatch(st,
-        b.toDF("src", "dst")
-          .select(col("src").cast("bigint").as("_s"),
-            col("dst").cast("bigint").as("_d")),
-        smallBatchEdges = 0L)
-    }.select(col("_v").as("id"), col("_lbl").as("component")))
-    assert(distFolded == oneShot)
-    // streaming fold: same batches through foreachBatch
-    val mem = MemoryStream[(Long, Long)]
-    val m = new Streams.ComponentsMaintainer(verts)
-    val q = mem.toDF().toDF("src", "dst").writeStream
-      .outputMode("append").foreachBatch(m.sink).start()
-    try {
-      splits.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-      assert(assignment(m.state) == oneShot)
-    } finally q.stop()
+    (fixture +: random).foreach { case (vs, splits) =>
+      val verts = vs.toDF("id")
+      val want = componentsModel(vs, splits.flatten)
+      // one-shot reference: everything in a single batch
+      val oneShot = assignment(graft.analytics.Iterative
+        .incrementalComponents(verts, Seq(splits.flatten.toDF("src", "dst"))))
+      assert(oneShot == want)
+      val folded = assignment(graft.analytics.Iterative
+        .incrementalComponents(verts, splits.map(_.toDF("src", "dst"))))
+      assert(folded == want)
+      // the two merge paths must agree: the driver union-find (every
+      // batch here is under the size bound) vs the distributed
+      // min-label fixpoint, forced by a cap of 0 — the 100-TB path must
+      // not rot just because fixtures never reach it
+      val (distFolded, scope) = graft.plans.Supersteps.withCap(0L)(
+        assignment(splits.foldLeft(
+          verts.select(col("id").cast("bigint").as("_v"))
+            .select(col("_v"), col("_v").as("_lbl")).localCheckpoint()) {
+          (st, b) => graft.analytics.Iterative.mergeComponentsBatch(st,
+            b.toDF("_s", "_d"))
+        }.select(col("_v").as("id"), col("_lbl").as("component"))))
+      assert(scope.onDriver.get == 0 && scope.distributed.get >= splits.size)
+      assert(distFolded == want)
+      // streaming fold: same batches through foreachBatch
+      val mem = MemoryStream[(Long, Long)]
+      val m = new Streams.ComponentsMaintainer(verts)
+      val q = mem.toDF().toDF("src", "dst").writeStream
+        .outputMode("append").foreachBatch(m.sink).start()
+      try {
+        splits.filter(_.nonEmpty).foreach { b =>
+          mem.addData(b: _*); q.processAllAvailable()
+        }
+        assert(assignment(m.state) == want)
+      } finally q.stop()
+    }
   }
 
   test("streaming decontamination == batch decontaminate, any split") {
